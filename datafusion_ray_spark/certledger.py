@@ -24,9 +24,10 @@ This module makes that policy machine-checkable:
   pinned entries first, then rotating slots ranked stale-first /
   oldest-certified-first / name.
 - ``python -m datafusion_ray_spark.certledger`` writes ``CERT_LEDGER.json``
-  at the repo root; ``tests/test_cert_ledger.py`` asserts the registry's
-  declared order REPRODUCES the committed ledger's window, so the window
-  shipped to the driver is provably the ledger's pick, not hand-waving.
+  at the repo root. That file is the window's only home: the registry
+  reads its ``"window"`` list to order its entries, so the window shipped
+  to the driver IS the ledger's pick, and ``tests/test_cert_ledger.py``
+  asserts the committed pick is reproducible from the repo state.
 
 The file closure is conservative (file-level, transitive): touching a
 shared module marks every entry that can reach it stale. When more entries
@@ -57,26 +58,36 @@ PACKAGE = "datafusion_ray_spark"
 PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 REPO_ROOT = os.path.dirname(PACKAGE_DIR)
 
+#: The ledger file. Its ``"window"`` list is the ONLY stored copy of the
+#: certification window: ``queries.registry.build_registry`` orders its
+#: entries by it, so regenerating the ledger moves the window without any
+#: package edit (and without changing ``package_tree_hash``).
+LEDGER_PATH = os.path.join(REPO_ROOT, "CERT_LEDGER.json")
+
+#: Pinned every round after the TPC-H suite: the 8 family anchors, the
+#: flagship answers that must stay CONTINUOUSLY driver-certified.
+CERTIFICATION_FLAGSHIPS = [
+    "dedup_minhash_lsh", "dedup_groups",      # near-dup pipeline + groups
+    "sim_knn_graph",                          # ANN batch workload
+    "join_asof",                              # temporal-join family anchor
+    "ev_session_window",                      # event windowing anchor
+    "text_token_stats",                       # text pipeline anchor
+    "sketch_count_min",                       # mergeable-sketch anchor
+    "mm_decode_features",                     # multimodal anchor
+]
+
 #: modules NEVER in closures (also invisible to import resolution, so
-#: importing them doesn't pull them in transitively):
-#:
-#: - ``queries.window`` is policy-only: the window declaration changes
-#:   every round BY DESIGN (the window moves) without altering any
-#:   entry's implementation — hashing it would mark everything stale
-#:   every round and make the staleness signal vacuous.
-#: - ``queries.registry`` is assembly plumbing (round 11, was a closure
-#:   LEAF in round 10): it imports EVERY query/operator module to build
-#:   the entry dict, so expanding it fused all 192 closures, and even as
-#:   a hashed leaf it was touched every round (appends, ordering), which
-#:   saturated the staleness signal — the round-10 verdict's finding.
-#:   Its only per-entry executable logic is the ``_sql_entry`` wrapper
-#:   (``register_tables`` + ``spark.sql``), both sides of which ARE
-#:   hashed: ``sources/tables.py`` joins every closure, and the SQL text
-#:   itself is the entry's FRAGMENT (below).
-EXCLUDE_FROM_CLOSURE = (
-    f"{PACKAGE}.queries.window",
-    f"{PACKAGE}.queries.registry",
-)
+#: importing them doesn't pull them in transitively): ``queries.registry``
+#: is assembly plumbing (round 11, was a closure LEAF in round 10): it
+#: imports EVERY query/operator module to build the entry dict, so
+#: expanding it fused all 192 closures, and even as a hashed leaf it was
+#: touched every round (appends, ordering), which saturated the staleness
+#: signal — the round-10 verdict's finding. Its only per-entry executable
+#: logic is the ``_sql_entry`` wrapper (``register_tables`` +
+#: ``spark.sql``), both sides of which ARE hashed: ``sources/tables.py``
+#: joins every closure, and the SQL text itself is the entry's FRAGMENT
+#: (below).
+EXCLUDE_FROM_CLOSURE = (f"{PACKAGE}.queries.registry",)
 
 _ROUND_MARKER = re.compile(r"^round (\d+): verdict/advice/correctness/bench")
 
@@ -262,6 +273,37 @@ class FragmentState:
         return any(name in frags for frags in self.frag_now.values())
 
 
+#: one source line with its terminator, split the way the Python parser
+#: (and ``ast.get_source_segment``) splits lines: only ``\r\n``, ``\r`` and
+#: ``\n`` end a line, unlike ``str.splitlines``.
+_SOURCE_LINE = re.compile(r"[^\r\n]*(?:\r\n?|\n)|[^\r\n]+")
+
+
+def _segmenter(source: str):
+    """``node -> ast.get_source_segment(source, node)``, with the module
+    split into lines once instead of on every call (the stdlib re-splits
+    the whole module per call, which dominated ``build_ledger``). Node
+    columns are UTF-8 byte offsets, so each line is sliced as bytes."""
+    lines = _SOURCE_LINE.findall(source)
+    encoded = [ln.encode() for ln in lines]
+
+    def segment(node) -> str | None:
+        end_lineno = getattr(node, "end_lineno", None)
+        end_col = getattr(node, "end_col_offset", None)
+        if end_lineno is None or end_col is None:
+            return None
+        first, last = node.lineno - 1, end_lineno - 1
+        if first == last:
+            return encoded[first][node.col_offset:end_col].decode()
+        return (
+            encoded[first][node.col_offset:].decode()
+            + "".join(lines[first + 1:last])
+            + encoded[last][:end_col].decode()
+        )
+
+    return segment
+
+
 def _extract_fragments(
     source: str, names: set[str], no_claim: frozenset[str] = frozenset()
 ) -> tuple[dict[str, str], str]:
@@ -274,6 +316,7 @@ def _extract_fragments(
     modules import — their editors' staleness must not be captured by
     one entry)."""
     tree = ast.parse(source)
+    segment = _segmenter(source)
     lines = source.splitlines(keepends=True)
     offsets = [0]
     for ln in lines:
@@ -298,7 +341,7 @@ def _extract_fragments(
             and call_stack
         ):
             inner = call_stack[-1]
-            seg = ast.get_source_segment(source, inner)
+            seg = segment(inner)
             if seg is not None:
                 frags.setdefault(node.value, set()).add(seg)
                 claimed.append(span(inner))
@@ -336,7 +379,7 @@ def _extract_fragments(
             fstart, fend = span(fdef)
             if fstart <= cstart and cend <= fend:
                 continue  # def encloses the declaration itself
-            seg = ast.get_source_segment(source, fdef)
+            seg = segment(fdef)
             if seg is not None:
                 frags[entry_name].add(seg)
                 claimed.append((fstart, fend))
@@ -478,14 +521,20 @@ def fragment_state(names: set[str]) -> FragmentState:
         no_claim = exported.get(path, frozenset())
         prev_frags: dict[str, str] | None = None  # None = module absent
         prev_residual: str | None = None
+        # most modules are unchanged across most rounds: extract once per
+        # distinct source text
+        extracted: dict[str, tuple[dict[str, str], str]] = {}
         for rnd in range(1, current + 1):
             src = _source_at_round(path, rnd, current, markers)
             if src is None:
                 frags, residual = {}, None
+            elif src in extracted:
+                frags, residual = extracted[src]
             else:
                 try:
                     frags, residual = _extract_fragments(src, names,
                                                          no_claim)
+                    extracted[src] = (frags, residual)
                 except SyntaxError:  # pragma: no cover - historic blob
                     frags, residual = {}, f"unparseable-r{rnd}"
             if residual != prev_residual:
@@ -719,10 +768,9 @@ def pick_window(
 
 
 def pinned_names() -> list[str]:
-    """The window's fixed prefix: the TPC-H suite + the family flagships
-    (same order the registry declares)."""
+    """The window's fixed prefix: the TPC-H suite (declaration order) +
+    ``CERTIFICATION_FLAGSHIPS``."""
     from .queries.tpch import TPCH_QUERIES
-    from .queries.window import CERTIFICATION_FLAGSHIPS
 
     return [q.name for q in TPCH_QUERIES.values()] + list(
         CERTIFICATION_FLAGSHIPS
@@ -738,9 +786,7 @@ def package_tree_hash() -> str:
     round's final code commits recorded hashes the driver never
     certified)."""
     modmap = _module_map()
-    paths = sorted(modmap.values()) + [
-        f"{PACKAGE}/queries/window.py", f"{PACKAGE}/queries/registry.py",
-    ]
+    paths = sorted(modmap.values()) + [f"{PACKAGE}/queries/registry.py"]
     h = hashlib.sha256()
     for rel in sorted(set(paths)):
         h.update(rel.encode())
@@ -785,7 +831,7 @@ def main() -> None:
             for e in ledger.values()
         },
     }
-    out = os.path.join(REPO_ROOT, "CERT_LEDGER.json")
+    out = LEDGER_PATH
     with open(out, "w", encoding="utf-8") as fh:
         json.dump(payload, fh, indent=1, sort_keys=False)
         fh.write("\n")

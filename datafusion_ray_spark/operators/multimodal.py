@@ -430,6 +430,10 @@ def frame_lumas(binary_df: DataFrame, frame_bytes: int = 256) -> DataFrame:
     identical outputs everywhere), and it removes a whole-payload copy
     that only grows with width.
 
+    NULL payloads yield no frames, like empty ones: the kernel reads the
+    column's validity bitmap and zeroes their lengths, so it never relies
+    on what a writer left in a null slot's offsets.
+
     Scale: pure projection (partition-preserving); output is
     ~len/frame_bytes rows per payload, narrow (3 ints).
     """
@@ -446,6 +450,8 @@ def frame_lumas(binary_df: DataFrame, frame_bytes: int = 256) -> DataFrame:
             ].astype(np.int64)
             data = np.frombuffer(pay.buffers()[2], dtype=np.uint8)
             lens = offs[1:] - offs[:-1]
+            if pay.null_count:
+                lens[pay.is_null().to_numpy(zero_copy_only=False)] = 0
             nf = -(-lens // frame_bytes)  # ceil; 0 frames for empty payloads
             total = int(nf.sum())
             if not total:

@@ -15,8 +15,6 @@ verification touches candidates only, nothing collects rows to the driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1180,19 +1178,16 @@ ORDER BY user_id, eus, event_id
 # the per-doc fraction is a ppm integer.
 
 
-#: Hub-safe mode for the novelty scorer (r12, VERDICT r11 #2). The star
-#: loop can PROBE its (bounded, pinned) edge set's degree cheaply; the
-#: shingle stream is corpus-scale, so probing its max frequency would cost
-#: the very pass the guard exists to protect — the switch is therefore a
-#: deployment conf, default off (the window form, 23% faster at sf0.1 and
-#: plan-ledger-pinned). Set SPARK_GRAFT_NOVELTY_HUB_SAFE=1 on corpora with
-#: heavy boilerplate (a corpus-wide shingle's window partition is ONE
-#: task): the aggregate+join form's partial min combines hot shingles
-#: map-side and the join-back is AQE-skew-splittable.
-NOVELTY_HUB_SAFE = os.environ.get("SPARK_GRAFT_NOVELTY_HUB_SAFE", "0") == "1"
-
-
 def run_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document novelty (first-occurrence shingle share, ppm).
+
+    Skew: the first-occurrence attach is a window partitioned by shingle,
+    so a corpus-wide boilerplate shingle lands in ONE window task. The
+    skew-safe alternatives are slower at every measured size (sf0.1, one
+    JVM, 10 alternations: this form 0.81-0.91 s; aggregate + join-back
+    1.56 s, 0/10 wins; first-doc count joined to ``size(shingles)``
+    1.27 s), so this is the only form.
+    """
     from pyspark.sql import Window
 
     docs = _docs(spark, sf_dir)
@@ -1203,19 +1198,12 @@ def run_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys) and shuffled the full exploded stream a second time through
     # a sort-merge join. `min(doc_id) OVER (PARTITION BY s)` attaches the
     # first-occurrence doc in the one (s) shuffle; the per-doc aggregate
-    # is then map-side combinable. The boilerplate-shingle straggler
-    # escape is NOVELTY_HUB_SAFE above.
+    # is then map-side combinable.
     sh = docs.select(
         "doc_id", F.explode(dedup.shingles("text")).alias("s")
     )
-    if NOVELTY_HUB_SAFE:
-        first = sh.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
-        joined = sh.join(first, "s")
-    else:
-        fd = F.min("doc_id").over(Window.partitionBy("s"))
-        joined = sh.withColumn("first_doc", fd)
     return (
-        joined
+        sh.withColumn("first_doc", F.min("doc_id").over(Window.partitionBy("s")))
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_shingles"),

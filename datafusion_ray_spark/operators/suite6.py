@@ -263,23 +263,27 @@ def run_text_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     action are GONE — the totals ride as a 1-row broadcast (the repo's
     scalar-crossJoin idiom) so the whole query is ONE plan whose five
     (source, term) consumers resolve to ReusedExchange instead of cache
-    reads. The explicit not-null guard on the group keys exists to keep
-    every leg's exchange subtree CANONICALLY IDENTICAL: the inner
-    vocab-join infers IsNotNull(term) and the left join IsNotNull on
-    both keys into their legs, and a constraint present in one leg but
-    not another defeats exchange reuse (the sketch_hll r11 lesson).
-    Values are unchanged — explode(split()) never emits null terms and
-    a null source never matches the grid's join keys, so such rows
-    never reached the output. Measured at sf0.1: runtime shuffle
-    117 KB / 1802 rows / 5 exchanges, 0 reused → 19.5 KB / 691 rows /
-    4 + 5 reused; cache write and the extra driver job gone. The grid
-    is a |sources|×V broadcast join — bounded by construction."""
+    reads. Every leg's exchange subtree must stay CANONICALLY IDENTICAL
+    (a constraint present in one leg but not another defeats exchange
+    reuse, the sketch_hll r11 lesson): the explicit IsNotNull(term) guard
+    matches what the inner vocab-join infers (explode(split()) never
+    emits null terms, so values are unchanged), and the grid probe joins
+    source null-safely so it infers no IsNotNull(source). Measured at
+    sf0.1: runtime shuffle 117 KB / 1802 rows / 5 exchanges, 0 reused →
+    19.5 KB / 691 rows / 4 + 5 reused; cache write and the extra driver
+    job gone. The grid is a |sources|×V broadcast join — bounded by
+    construction.
+
+    NULL source: documents without a source count toward the corpus and
+    form their own group. It gets an output row with ``source`` NULL, its
+    real ``n_tokens``, and every per-term count c_sw read as 0 — what the
+    oracle's ``LEFT JOIN ... ON p.source = g.source`` gives it."""
     # not spread(): the explode feeds a (source, term) shuffle directly —
     # the extra repartition measured +0.7 s at sf0.1 for no gain (r7)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(tokens("text")).alias("term"))
     st = (
-        tok.where(F.col("term").isNotNull() & F.col("source").isNotNull())
+        tok.where(F.col("term").isNotNull())
         .groupBy("source", "term")
         .agg(F.count("*").alias("c_sw"))
     )
@@ -299,8 +303,17 @@ def run_text_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ns = per_src.groupBy("source").agg(F.sum("c_sw").alias("n_s"))
     grid = ns.crossJoin(F.broadcast(vocab)).crossJoin(F.broadcast(nv))
-    joined = grid.join(per_src, ["source", "term"], "left").withColumn(
-        "c_sw", F.coalesce(F.col("c_sw"), F.lit(0))
+    # Null-safe on source so the join infers no IsNotNull(source) into the
+    # per_src leg (that would defeat its exchange reuse); a NULL source
+    # still gets c_sw = 0 everywhere, as the SQL left join gives it.
+    hit = F.col("g.source").eqNullSafe(F.col("ps.source")) & (
+        F.col("g.term") == F.col("ps.term")
+    )
+    joined = grid.alias("g").join(per_src.alias("ps"), hit, "left").select(
+        "g.source", "n_s", "c", "n_all", "v",
+        F.when(F.col("g.source").isNull(), F.lit(0))
+        .otherwise(F.coalesce(F.col("ps.c_sw"), F.lit(0)))
+        .alias("c_sw"),
     )
     # Arithmetic is shape-identical to the literal form it replaces:
     # n_s + v is the same long addition, and (n_all + v) cast to double

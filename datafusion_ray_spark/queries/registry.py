@@ -12,11 +12,13 @@ register callables directly.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..certledger import LEDGER_PATH
 from ..sources.tables import register_tables
 from .coverage import COVERAGE_QUERIES
 from .coverage2 import COVERAGE2_QUERIES
@@ -49,20 +51,22 @@ def _sql_entry(qdef: QueryDef) -> SuiteEntry:
 # FIRST 50), so order is the certification window.  Everything stays green
 # in the local oracle gate (tests/test_suite_oracle.py) regardless of order.
 #
-# WINDOW POLICY (round 10+, the rotation's successor): the 50-slot driver
-# window = q1–q22 (fixed) + 8 family flagships (fixed) + 20 rotating slots
-# picked by the STALENESS LEDGER (datafusion_ray_spark/certledger.py →
-# CERT_LEDGER.json): entries whose implementation file-closure changed
-# since their last driver-certified round first, then oldest-certified
-# first. Rounds 4–9 rotated never-certified entries through the window
-# until every declared entry had a driver row (192/192, round 9); from
-# round 10 the same window budget re-certifies the entries most likely to
-# have decayed. The concrete lists live in queries/window.py (policy-only
-# module, excluded from the ledger's closures — see its docstring), and
-# tests/test_cert_ledger.py asserts they reproduce the committed ledger.
-from .window import CERTIFICATION_FLAGSHIPS, CERTIFICATION_ROTATING
+# WINDOW POLICY: the 50-slot driver window = q1–q22 + 8 family flagships +
+# 20 rotating slots, picked by the staleness ledger
+# (datafusion_ray_spark/certledger.py, which owns the policy and the
+# flagship list) and stored ONLY in CERT_LEDGER.json's "window" list. The
+# registry reads that list: `python -m datafusion_ray_spark.certledger`
+# moves the window with no package edit.
 
-_PRIORITY_AFTER_TPCH = CERTIFICATION_FLAGSHIPS + CERTIFICATION_ROTATING
+
+def _ledger_window() -> list[str]:
+    """The committed ledger's window, or [] when there is no ledger file
+    (the registry then keeps declaration order, which starts with TPC-H)."""
+    try:
+        with open(LEDGER_PATH, encoding="utf-8") as fh:
+            return json.load(fh)["window"]
+    except FileNotFoundError:
+        return []
 
 
 def build_registry() -> dict[str, SuiteEntry]:
@@ -107,8 +111,12 @@ def build_registry() -> dict[str, SuiteEntry]:
     ):
         unordered[entry.name] = entry
 
+    # Ledger names no longer declared are skipped, so a renamed entry
+    # cannot break build_registry — which certledger.main() needs to
+    # regenerate the ledger.
     entries: dict[str, SuiteEntry] = {}
-    for name in [q.name for q in TPCH_QUERIES.values()] + _PRIORITY_AFTER_TPCH:
-        entries[name] = unordered.pop(name)
+    for name in _ledger_window():
+        if name in unordered:
+            entries[name] = unordered.pop(name)
     entries.update(unordered)
     return entries

@@ -9,6 +9,8 @@ and containment's asymmetry (high containment at low Jaccard).
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -222,6 +224,21 @@ def test_scene_cuts_finds_known_boundary(spark):
     assert got[2] == (4, 0, -1)
 
 
+def test_frame_lumas_null_payload_yields_no_frames(spark):
+    """A NULL payload is treated like an empty one on purpose (validity
+    bitmap, not offsets): no frames for it, and its neighbours in the same
+    Arrow batch keep their exact lumas."""
+    from datafusion_ray_spark.operators.multimodal import frame_lumas
+
+    df = spark.createDataFrame(
+        [(1, bytearray([7] * 300)), (2, None), (3, bytearray()),
+         (4, bytearray([1] * 10))],
+        "doc_id long, payload binary",
+    ).coalesce(1)
+    got = sorted(tuple(r) for r in frame_lumas(df).collect())
+    assert got == [(1, 0, 7 * 256, 256), (1, 1, 7 * 44, 44), (4, 0, 10, 10)]
+
+
 def test_containment_tie_break_and_threshold(spark):
     """Equal-size sets: smaller doc_id is 'small'; pairs under the
     threshold are dropped."""
@@ -421,24 +438,38 @@ def test_ngram_novelty_duplicate_scores_zero(spark, monkeypatch):
     assert got[4][0] == 2 and got[4][1] < 100_000
 
 
-def test_ngram_novelty_hub_safe_twin_is_value_identical(spark, monkeypatch):
-    """r12 skew guard: SPARK_GRAFT_NOVELTY_HUB_SAFE swaps the window-min
-    first-occurrence attach for a partial-agg min + AQE-skew-splittable
-    join-back. Same rows, and the hub-safe plan must carry no Window."""
-    import datafusion_ray_spark.operators.suite4 as s4
+#: docs drawn as (base text, edited word position): few bases and small
+#: edits make exact and near duplicates collide in many LSH bands at once,
+#: the case where one pair is emitted by several buckets.
+_BASES = [" ".join(f"b{b}w{i}" for i in range(24)) for b in range(3)]
+_dup_corpora = st.lists(
+    st.tuples(st.integers(0, len(_BASES) - 1), st.integers(-1, 23)),
+    min_size=2, max_size=12,
+)
 
-    a = " ".join(f"w{i}" for i in range(20))
-    b = " ".join(f"x{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(1, a, "s"), (2, a, "s"), (3, b, "s"), (4, a + " " + b, "s")],
-        "doc_id long, text string, source string",
-    )
-    monkeypatch.setattr(s4, "_docs", lambda _s, _d: docs)
-    base = [tuple(r) for r in s4.run_ngram_novelty(spark, "ignored").collect()]
-    monkeypatch.setattr(s4, "NOVELTY_HUB_SAFE", True)
-    safe_df = s4.run_ngram_novelty(spark, "ignored")
-    assert [tuple(r) for r in safe_df.collect()] == base
-    assert "Window" not in safe_df._jdf.queryExecution().executedPlan().toString()
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.function_scoped_fixture])
+@given(corpus=_dup_corpora)
+def test_minhash_pairs_are_unique(spark, corpus):
+    """``minhash_dedup_pairs`` emits each (doc_a, doc_b) at most once, with
+    doc_a < doc_b: ``dedup_lsh_eval``'s marker join counts pairs and would
+    double-count a repeated one."""
+    from datafusion_ray_spark.operators import dedup
+
+    rows = []
+    for doc_id, (base, pos) in enumerate(corpus):
+        words = _BASES[base].split()
+        if pos >= 0:
+            words[pos] = f"edit{doc_id}"
+        rows.append((doc_id, " ".join(words)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = [(r["doc_a"], r["doc_b"])
+             for r in dedup.minhash_dedup_pairs(docs).collect()]
+    spark.catalog.clearCache()
+    assert len(pairs) == len(set(pairs)), sorted(pairs)
+    assert all(a < b for a, b in pairs)
 
 
 def test_knn_graph_ranks_planted_neighbors(spark):

@@ -5,6 +5,8 @@ skewing per-dimension thresholds."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from datafusion_ray_spark.operators import suite6
@@ -54,3 +56,27 @@ def test_bq_stats_uniform_vectors_pass(spark):
     # micro-unit integer sums: floor(x*1e6) per value
     assert sums[0] == 250000 + 750000 - 1250000
     assert sums[1] == -500000 + 1500000 + 500000
+
+
+def test_text_kl_null_source_matches_oracle(spark, sf_dir, tmp_path):
+    """Documents with a NULL source: Spark and the DuckDB oracle SQL agree
+    on every row, including the NULL-source group's own row."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_ray_spark.sources.tables import duckdb_register
+    from datafusion_ray_spark.testing import assert_frames_match
+
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    rows = docs.slice(0, 40).to_pylist()
+    for i in (3, 7):
+        rows[i]["source"] = None
+    pq.write_table(pa.Table.from_pylist(rows, schema=docs.schema),
+                   str(tmp_path / "documents.parquet"))
+    con = duckdb.connect()
+    duckdb_register(con, str(tmp_path), tables=("documents",))
+    want = con.sql(suite6.text_kl_oracle()).df()
+    got = suite6.run_text_kl(spark, str(tmp_path)).toPandas()
+    assert want["source"].isna().sum() == 1
+    assert_frames_match(got, want, name="text_kl_null_source")
